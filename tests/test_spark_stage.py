@@ -503,6 +503,189 @@ def test_pipeline_observed_metrics_match_landed_output(spark, corpus_path, tmp_p
     assert manifest == readback
 
 
+def _data_files(root) -> list:
+    """Parquet data files under ``root``; Spark's hidden ``.crc`` and
+    ``_SUCCESS`` markers are not counted."""
+    return [
+        os.path.join(d, f) for d, _, files in os.walk(root) for f in files if f[0] not in "._"
+    ]
+
+
+def _landed(spark, out) -> list:
+    return sorted(
+        (r["doc_id"], r["part"], str(r["spans"])) for r in spark.read.parquet(out).collect()
+    )
+
+
+def _manifest_counts(spark, man) -> dict:
+    return {
+        r["part"]: (r["n_docs"], r["n_spans"], r["n_chars"])
+        for r in spark.read.parquet(man).collect()
+    }
+
+
+def test_assign_parts_balances_counts_and_keeps_small_parts_whole():
+    from xhtmlkit_spark.plans.pipeline import assign_parts
+
+    # parts just over 4 shares each: whole-share slices rounded up
+    # would stack two slices on one task
+    counts = {p: 7536 if p < 8 else 7464 for p in range(16)}
+    total, n = sum(counts.values()), 64
+    load = [0] * n
+    for p, (a, m) in assign_parts(counts, n).items():
+        for h in range(counts[p]):
+            load[(a + h % m * n) // total] += 1
+    assert load == [total // n] * n
+    # parts under one share stay whole, each on the task holding its
+    # midpoint; NULL sorts first
+    assert assign_parts({9: 64, 7: 61, -3: 60, None: 5}, 2) == {
+        None: (0, 1),
+        -3: (0, 1),
+        7: (190, 1),
+        9: (190, 1),
+    }
+
+
+@pytest.mark.parametrize("n", [4, 32])
+def test_part_placement_lands_rows_on_assigned_tasks(spark, corpus_path, n):
+    """After the part-placed exchange every row sits on the task the
+    driver assigned to its part (and, for a part cut at task
+    boundaries, to its position in the part)."""
+    from pyspark.sql import functions as F
+
+    from xhtmlkit_spark.plans.pipeline import assign_parts, place_parts
+
+    df = spark.read.parquet(corpus_path)
+    counts = {r["part"]: r["count"] for r in df.groupBy("part").count().collect()}
+    plan = assign_parts(counts, n)
+    rows = (
+        place_parts(df, counts, n)
+        .select("part", F.xxhash64("doc_id").alias("h"), F.spark_partition_id().alias("pid"))
+        .collect()
+    )
+    assert len(rows) == 120
+    task_docs = [0] * n
+    for r in rows:
+        a, m = plan[r["part"]]
+        assert r["pid"] == (a + r["h"] % m * n) // 120, r
+        task_docs[r["pid"]] += 1
+    # no task idles, also when there are more tasks than parts, and
+    # each task's (task, part) pairs — its files — stay few
+    assert min(task_docs) > 0
+    assert len({(r["pid"], r["part"]) for r in rows}) <= 16 + n
+
+
+@pytest.mark.parametrize("n", [4, 32])
+def test_pipeline_writes_at_most_parts_plus_tasks_files(spark, corpus_path, tmp_path, n):
+    from xhtmlkit_spark.plans.pipeline import run_pipeline
+
+    out = str(tmp_path / "out")
+    run_pipeline(spark, corpus_path, out, str(tmp_path / "manifest"), num_partitions=n)
+    assert len(_data_files(out)) <= 16 + n
+
+
+def test_pipeline_output_identical_across_parallelism(spark, corpus_path, tmp_path):
+    from xhtmlkit_spark.plans.pipeline import run_pipeline
+
+    landed, manifests = [], []
+    for n in (2, 4, 16):
+        out, man = str(tmp_path / f"out{n}"), str(tmp_path / f"man{n}")
+        run_pipeline(spark, corpus_path, out, man, num_partitions=n)
+        landed.append(_landed(spark, out))
+        manifests.append(_manifest_counts(spark, man))
+    assert len(landed[0]) == 120
+    assert landed[0] == landed[1] == landed[2]
+    assert manifests[0] == manifests[1] == manifests[2]
+
+
+def test_pipeline_supplied_parts_with_null(spark, corpus_path, tmp_path):
+    """A corpus that brings its own ``part`` column — arbitrary,
+    non-contiguous ints and one NULL part — lands every document, and
+    the manifest's per-part counts match the landed output; the NULL
+    part is recorded and skipped on resume like any other."""
+    from pyspark.sql import functions as F
+
+    from xhtmlkit_spark.operators.extract_stage import span_metrics
+    from xhtmlkit_spark.plans.pipeline import run_pipeline
+
+    corpus = str(tmp_path / "corpus")
+    spark.read.parquet(corpus_path).withColumn(
+        "part",
+        F.when(F.col("part") == 3, F.lit(None)).otherwise(F.col("part") * 37 - 200).cast("int"),
+    ).write.parquet(corpus)
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    r1 = run_pipeline(spark, corpus, out, man, num_partitions=8)
+    assert r1["docs_total"] == 120
+    landed = {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+        for r in spark.read.parquet(out).collect()
+    }
+    assert landed == {d: [tuple(s) for s in sp] for d, sp in _pure_python_expected(corpus_path).items()}
+    readback = {
+        r["part"]: (r["n_docs"], r["n_spans"], r["n_chars"])
+        for r in span_metrics(spark.read.parquet(out))
+        .groupBy("part")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_spans").cast("long").alias("n_spans"),
+            F.sum("n_chars").alias("n_chars"),
+        )
+        .collect()
+    }
+    assert None in readback and -200 in readback and 1 not in readback
+    assert _manifest_counts(spark, man) == readback
+    r2 = run_pipeline(spark, corpus, out, man, num_partitions=8)
+    assert (r2["skipped_parts"], r2["docs_total"]) == (16, 0)
+
+
+def test_pipeline_manifest_append_is_one_file(spark, corpus_path, tmp_path):
+    """Each run that records parts adds exactly one manifest data file,
+    with the manifest's schema; a resume=False rerun over the same
+    output records nothing twice."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from xhtmlkit_spark.plans.pipeline import run_pipeline
+
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    first = spark.read.parquet(corpus_path).where(F.col("part") < 8)
+    run_pipeline(spark, corpus_path, out, man, num_partitions=4, corpus=first)
+    assert len(_data_files(man)) == 1
+    run_pipeline(spark, corpus_path, out, man, num_partitions=4)
+    assert len(_data_files(man)) == 2
+    assert spark.read.parquet(man).schema == T.StructType(
+        [
+            T.StructField("part", T.IntegerType()),
+            T.StructField("n_docs", T.LongType()),
+            T.StructField("n_spans", T.LongType()),
+            T.StructField("n_chars", T.LongType()),
+            T.StructField("run_id", T.StringType()),
+            T.StructField("finished_at", T.TimestampType()),
+        ]
+    )
+    rows = spark.read.parquet(man).select("part").collect()
+    assert sorted(r["part"] for r in rows) == list(range(16))
+
+    r3 = run_pipeline(spark, corpus_path, out, man, num_partitions=4, resume=False)
+    assert r3["docs_total"] == 120 and r3["skipped_parts"] == 0
+    assert len(_data_files(man)) == 2
+    assert spark.read.parquet(man).count() == 16
+
+
+def test_pipeline_corrupt_manifest_raises(spark, corpus_path, tmp_path):
+    """Only a missing manifest means "first run": an unreadable one
+    fails the job before anything is reprocessed."""
+    from xhtmlkit_spark.plans.pipeline import run_pipeline
+
+    man = tmp_path / "man"
+    man.mkdir()
+    (man / "part-00000.parquet").write_bytes(b"this is not a parquet file")
+    out = tmp_path / "out"
+    with pytest.raises(Exception, match="not a Parquet file"):
+        run_pipeline(spark, corpus_path, str(out), str(man), num_partitions=4)
+    assert not out.exists()
+
+
 def test_entry_contract_smoke(spark):
     import __spark_entry__ as e
 

@@ -1,36 +1,65 @@
 """The end-to-end extraction job (SURVEY.md §3.4, B24/B25/B9/B11).
 
-    scan → resume-filter → skew-salted repartition → mapInArrow extract
+    scan → resume-filter → part-placed repartition → mapInArrow extract
          → partition-atomic write → lineage manifest append
 
 Scale design (the part the judge grades — SURVEY.md §4.3):
 
-* **Skew**: doc sizes are log-normal (top-1% ≈ 100× median). AQE can
-  split skewed *shuffle* partitions but cannot see inside the Python
-  stage, so we repartition on ``(size_bucket, salt)`` before it:
-  size_bucket = ⌈log2(doc_bytes)⌉ groups docs of similar cost, salt
-  spreads each bucket over the cluster. Max-task-bytes / median is
-  reported in the manifest to prove it stayed bounded.
-* **Resume**: the manifest records finished ``part`` values; a rerun
-  anti-joins them away (broadcast — the manifest is tiny relative to
-  the corpus) and dynamic partition overwrite guarantees re-writing a
-  part is idempotent.
+* **Skew**: doc sizes are log-normal (top-1% ≈ 100× median) and the
+  sink is partitioned by ``part``, so the exchange before the Python
+  stage decides both task balance and file count. ``run_pipeline``
+  places parts: one column-pruned job counts documents per part, the
+  driver gives each task a contiguous run of whole parts of about
+  ``total / tasks`` documents, and a part larger than that share is
+  cut at the task boundaries inside it by ``xxhash64(doc_id)``. Each
+  task then writes one or two parts, so a run writes at most
+  parts + tasks files instead of tasks × parts, and balance is set by
+  document count rather than by hash collisions. AQE cannot see inside
+  the Python stage, so this is decided before it (BENCH/SKEW.md).
+  ``with_size_salt`` — the ``(size_bucket, salt)`` exchange — remains
+  for the stages that write no partitioned output.
+* **Resume**: the manifest records finished ``part`` values; a run
+  collects them once, filters them out of the input and never records
+  a part twice. Dynamic partition overwrite guarantees re-writing a
+  part is idempotent. Only a missing manifest means "first run"; an
+  unreadable one fails the job instead of silently reprocessing.
 * **Lineage**: one manifest row per part per run: row/span/char
-  counts + run_id, appended only after the part's data is on disk.
+  counts + run_id, appended as one file only after the part's data is
+  on disk.
 """
 
 from __future__ import annotations
 
+import time
 import uuid
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from xhtmlkit_spark.operators.extract_stage import extract_spans
 from xhtmlkit_spark.sources import io as xio
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
 
-__all__ = ["with_size_salt", "run_pipeline", "derive_part"]
+__all__ = [
+    "with_size_salt",
+    "run_pipeline",
+    "derive_part",
+    "assign_parts",
+    "place_parts",
+]
+
+MANIFEST_SCHEMA = pa.schema(
+    [
+        ("part", pa.int32()),
+        ("n_docs", pa.int64()),
+        ("n_spans", pa.int64()),
+        ("n_chars", pa.int64()),
+        ("run_id", pa.string()),
+        ("finished_at", pa.timestamp("us", tz="UTC")),
+    ]
+)
 
 
 def derive_part(df: DataFrame, n_parts: int = 16) -> DataFrame:
@@ -80,6 +109,94 @@ def with_size_salt(
     )
 
 
+# keys[t] for each task count; they depend only on Spark's hash
+_ROUTE_KEYS: dict[int, list[int]] = {}
+
+
+def _route_keys(spark: SparkSession, num_partitions: int) -> list[int]:
+    """``keys[t]`` is an int that ``repartition(num_partitions, key)``
+    sends to task ``t``.
+
+    Hash partitioning sends a row to ``pmod(hash(key), n)`` — the
+    Murmur3 (seed 42) of SQL ``hash()`` — so Spark itself evaluates
+    that over the first ints until every task has one. The result is
+    fixed by ``n`` alone and cached per ``n``.
+    """
+    keys = _ROUTE_KEYS.get(num_partitions)
+    if keys is None:
+        k = F.col("id").cast("int")
+        task = F.pmod(F.hash(k), F.lit(num_partitions))
+        found: dict = {}
+        limit = 16 * num_partitions
+        while len(found) < num_partitions:
+            for r in spark.range(limit, numPartitions=1).select(k, task).collect():
+                found.setdefault(r[1], r[0])
+            limit *= 4
+        keys = _ROUTE_KEYS[num_partitions] = [found[t] for t in range(num_partitions)]
+    return keys
+
+
+def assign_parts(counts: dict, num_tasks: int) -> dict:
+    """Place parts on tasks by document count: ``{part: (a, m)}``.
+    A document of the part goes to task
+    ``(a + pmod(xxhash64(doc_id), m) * num_tasks) // total``.
+
+    Parts lie in order (NULL first) along the line of all ``total``
+    documents, and each task owns ``total / num_tasks`` of it, so every
+    task gets a contiguous run. A part smaller than that share stays
+    whole, on the task that holds its midpoint (``a = task * total``,
+    ``m = 1``). A larger part is cut where task boundaries fall inside
+    it: the hash of ``doc_id`` gives the document a position in the
+    part, and the position gives the task (``a = start * num_tasks``,
+    ``m = count``).
+    """
+    total = sum(counts.values())
+    plan = {}
+    pos = 0
+    for p in sorted(counts, key=lambda p: (p is not None, p)):
+        c = counts[p]
+        if c * num_tasks < total:
+            plan[p] = ((2 * pos + c) * num_tasks // (2 * total) * total, 1)
+        else:
+            plan[p] = (pos * num_tasks, c)
+        pos += c
+    return plan
+
+
+def place_parts(df: DataFrame, counts: dict, num_partitions: int) -> DataFrame:
+    """Repartition ``df`` so that each row lands on the task
+    :func:`assign_parts` gives it. ``xxhash64(doc_id)`` is independent
+    of the part's own hash (``part = crc32(doc_id) % n_parts``)."""
+    keys = _route_keys(df.sparkSession, num_partitions)
+    part = F.col("part")
+    key_type = df.schema["part"].dataType
+    routes = {
+        p: F.array(F.lit(a).cast("long"), F.lit(m).cast("long"))
+        for p, (a, m) in assign_parts(counts, num_partitions).items()
+    }
+    null_route = routes.pop(None, None)
+    route = F.lit(None)
+    if routes:
+        pairs = [x for p, r in routes.items() for x in (F.lit(p).cast(key_type), r)]
+        route = F.element_at(F.create_map(*pairs), part)
+    if null_route is not None:
+        route = F.when(part.isNull(), null_route).otherwise(route)
+    total = sum(counts.values())
+    task = F.expr(
+        f"(_route[0] + pmod(xxhash64(doc_id), _route[1]) * {num_partitions}) div {total}"
+    )
+    key = F.get(F.array(*[F.lit(k) for k in keys]), task.cast("int"))
+    return df.withColumn("_route", route).repartition(num_partitions, key).drop("_route")
+
+
+def _not_done(done: set) -> Column:
+    """Rows whose part is not in ``done``; NULL is a part like any other."""
+    part = F.col("part")
+    rest = [p for p in done if p is not None]
+    keep = ~part.isin(rest) if rest else F.lit(True)
+    return part.isNotNull() & keep if None in done else part.isNull() | keep
+
+
 def run_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -108,25 +225,26 @@ def run_pipeline(
         n_parts,
     )
 
-    skipped_parts = 0
-    if resume and manifest_path:
+    # one read of the parts already recorded serves the resume filter,
+    # skipped_parts and the append's "not recorded yet" check
+    done: set = set()
+    if manifest_path:
         manifest = xio.read_manifest(spark, manifest_path)
         if manifest is not None:
-            done = manifest.select("part").distinct()
-            skipped_parts = done.count()
-            df = df.join(F.broadcast(done), "part", "left_anti")  # B9 resume
+            done = {r["part"] for r in manifest.select("part").distinct().collect()}
+    skipped_parts = len(done) if resume else 0
+    if resume and done:
+        df = df.where(_not_done(done))  # B9 resume
 
-    import time as _time
-
-    from pyspark.sql import Observation
-
-    t0 = _time.monotonic()
-    # parts this run actually processes (post-resume-filter): per-part
-    # metrics are observed IN-FLIGHT on the write pass below, so a
-    # resumed run never touches output it didn't write (a column-pruned
-    # scan of the int part column here is ~free next to the span data)
-    run_parts = [r["part"] for r in df.select("part").distinct().collect()]
-    df = with_size_salt(df, num_partitions)
+    t0 = time.monotonic()
+    # documents per part this run actually processes (post-resume-
+    # filter), from a column-pruned scan of the int part column: they
+    # place the parts on tasks, and name the per-part metrics observed
+    # IN-FLIGHT on the write pass below, so a resumed run never touches
+    # output it didn't write
+    counts = {r["part"]: r["count"] for r in df.groupBy("part").count().collect()}
+    if counts:
+        df = place_parts(df, counts, num_partitions)
     out = extract_spans(df, options, passthrough=("part",))
     # column order for the partitioned sink: data cols first, part last
     out = out.select("doc_id", "spans", "part")
@@ -141,7 +259,7 @@ def run_pipeline(
     # row (no CSE across sibling aggregates), then they are projected
     # away before the sink.
     obs = Observation(f"xk_metrics_{run_id}")
-    if run_parts:
+    if counts:
         zero = F.lit(0).cast("long")
         n_chars = F.aggregate(
             F.col("spans"),
@@ -152,53 +270,43 @@ def run_pipeline(
             {"_n_spans": F.size("spans").cast("long"), "_n_chars": n_chars}
         )
         exprs = []
-        for p in run_parts:
-            cond = F.col("part") == F.lit(p)
+        for i, p in enumerate(counts):
+            cond = F.col("part").eqNullSafe(F.lit(p))
             exprs += [
-                F.sum(F.when(cond, F.lit(1).cast("long"))).alias(f"d_{p}"),
-                F.sum(F.when(cond, F.col("_n_spans"))).alias(f"s_{p}"),
-                F.sum(F.when(cond, F.col("_n_chars"))).alias(f"c_{p}"),
+                F.sum(F.when(cond, F.lit(1).cast("long"))).alias(f"d_{i}"),
+                F.sum(F.when(cond, F.col("_n_spans"))).alias(f"s_{i}"),
+                F.sum(F.when(cond, F.col("_n_chars"))).alias(f"c_{i}"),
             ]
         out = out.observe(obs, *exprs).drop("_n_spans", "_n_chars")
     xio.write_spans(out, output_path, fmt)
-    t_extract_write = _time.monotonic() - t0
-    t0 = _time.monotonic()
+    t_extract_write = time.monotonic() - t0
+    t0 = time.monotonic()
 
-    if run_parts:
+    if counts:
         m = obs.get
         stats_rows = [
             {
                 "part": p,
-                "n_docs": m[f"d_{p}"] or 0,
-                "n_spans": m[f"s_{p}"] or 0,
-                "n_chars": m[f"c_{p}"] or 0,
+                "n_docs": m[f"d_{i}"] or 0,
+                "n_spans": m[f"s_{i}"] or 0,
+                "n_chars": m[f"c_{i}"] or 0,
             }
-            for p in run_parts
-            if m[f"d_{p}"]  # parts that produced no rows stay unfinished
+            for i, p in enumerate(counts)
+            if m[f"d_{i}"]  # parts that produced no rows stay unfinished
         ]
     else:
         # fully-resumed rerun (or empty input): nothing written, nothing
         # to observe — totals are zero for a run that processed zero docs
         stats_rows = []
-    if manifest_path:
-        manifest = xio.read_manifest(spark, manifest_path)
-        done = (
-            {r["part"] for r in manifest.select("part").distinct().collect()}
-            if manifest is not None
-            else set()
+    new_rows = [r for r in stats_rows if r["part"] not in done]
+    if manifest_path and new_rows:
+        # one local Arrow table, appended as one file
+        now = datetime.now(timezone.utc)
+        table = pa.Table.from_pylist(
+            [{**r, "run_id": run_id, "finished_at": now} for r in new_rows],
+            schema=MANIFEST_SCHEMA,
         )
-        new_rows = [
-            (r["part"], r["n_docs"], r["n_spans"], r["n_chars"], run_id)
-            for r in stats_rows
-            if r["part"] not in done
-        ]
-        if new_rows:
-            xio.append_manifest(
-                spark.createDataFrame(
-                    new_rows, "part int, n_docs long, n_spans long, n_chars long, run_id string"
-                ).withColumn("finished_at", F.current_timestamp()),
-                manifest_path,
-            )
+        xio.append_manifest(spark.createDataFrame(table).coalesce(1), manifest_path)
 
     return {
         "run_id": run_id,
@@ -207,5 +315,5 @@ def run_pipeline(
         "skipped_parts": skipped_parts,
         "output_path": output_path,
         "t_extract_write": round(t_extract_write, 2),
-        "t_metrics": round(_time.monotonic() - t0, 2),
+        "t_metrics": round(time.monotonic() - t0, 2),
     }

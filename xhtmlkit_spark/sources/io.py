@@ -8,7 +8,7 @@ Switching to Iceberg is a config swap: ``fmt="iceberg"`` routes reads
 through ``spark.read.format("iceberg").load(table)`` and writes
 through ``writeTo(table).overwritePartitions()``; everything else in
 the pipeline (partition column, checkpoint manifest, resume
-anti-join) is format-agnostic.
+filter) is format-agnostic.
 """
 
 from __future__ import annotations
@@ -475,10 +475,15 @@ def write_spans(df: DataFrame, location: str, fmt: str = "parquet") -> None:
 
 
 def read_manifest(spark: SparkSession, location: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(location)
-    except Exception:  # first run: no manifest yet
+    """The manifest table, or None when ``location`` does not exist
+    (first run). The check goes through the Hadoop FileSystem of the
+    session's configuration; any other failure — a corrupt or
+    unreadable manifest — raises rather than turning resume off."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(location)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not path.getFileSystem(conf).exists(path):
         return None
+    return spark.read.parquet(location)
 
 
 def append_manifest(df: DataFrame, location: str) -> None:
