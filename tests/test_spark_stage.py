@@ -72,8 +72,7 @@ def test_determinism_across_parallelism(spark, corpus_path):
 
 def test_sliced_batch_handled():
     """mapInArrow fns must survive sliced ListArrays (offset != 0)."""
-    from xhtmlkit_spark.operators.extract_stage import make_extract_fn
-    from xkit.options import DEFAULT_OPTIONS
+    from xhtmlkit_spark.operators.extract_stage import make_doc_stage_fn
 
     span_t = pa.struct(
         [
@@ -95,24 +94,82 @@ def test_sliced_batch_handled():
         [pa.array(["d0", "d1", "d2"]), spans], names=["doc_id", "spans"]
     )
     sliced = batch.slice(1, 2)
-    fn = make_extract_fn(DEFAULT_OPTIONS, 0)
+    fn = make_doc_stage_fn(extract_doc, 0)
     (out,) = list(fn(iter([sliced])))
     assert out.column(0).to_pylist() == ["d1", "d2"]
     rows = out.column(1).to_pylist()
     assert rows[0][0]["text"] == "doc one text"
     assert rows[1][0]["media_ref"] == "m.png"
 
+    # the same kernel with a passthrough column and one output column of
+    # each shape (spans, string, map<string,string>, list<struct>) on a
+    # sliced batch holding a NULL spans row
+    from xhtmlkit_spark.operators.extract_stage import PA_SPANS, _doc_kernel
+
+    spans = pa.array(
+        [
+            [{"kind": "html", "text": "skipped", "media_ref": None, "offset": 0}],
+            [
+                {"kind": "html", "text": "b", "media_ref": None, "offset": 1},
+                {"kind": "media", "text": None, "media_ref": "a.png", "offset": 0},
+            ],
+            None,
+            [],
+        ],
+        type=pa.list_(span_t),
+    )
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["d0", "d1", "d2", "d3"]), pa.array([7, 8, 9, 10], pa.int32()), spans],
+        names=["doc_id", "part", "spans"],
+    )
+    item_t = pa.struct([pa.field("i", pa.int32()), pa.field("kind", pa.string())])
+    outputs = [
+        ("spans", PA_SPANS),
+        ("kinds", pa.string()),
+        ("refs", pa.map_(pa.string(), pa.string())),
+        ("items", pa.list_(item_t)),
+    ]
+    calls = []
+
+    def doc_fn(kinds, texts, refs, offsets):
+        calls.append(list(kinds))
+        n = len(kinds)
+        return (
+            (list(reversed(kinds)), list(reversed(texts)), list(reversed(refs)), list(range(n))),
+            ",".join(kinds),
+            [(k, r) for k, r in zip(kinds, refs) if r is not None],
+            [{"i": i, "kind": k} for i, k in enumerate(kinds)],
+        )
+
+    (out,) = list(_doc_kernel(doc_fn, outputs, 1)(iter([batch.slice(1, 3)])))
+    assert out.schema.names == ["doc_id", "part", "spans", "kinds", "refs", "items"]
+    assert out.column(0).to_pylist() == ["d1", "d2", "d3"]
+    assert out.column(1).to_pylist() == [8, 9, 10]
+    assert calls == [["html", "media"], []]  # never called for the NULL row
+    d1, d2, d3 = out.to_pylist()
+    assert d1["spans"] == [
+        {"kind": "media", "text": None, "media_ref": "a.png", "offset": 0},
+        {"kind": "html", "text": "b", "media_ref": None, "offset": 1},
+    ]
+    assert d1["kinds"] == "html,media"
+    assert d1["refs"] == [("media", "a.png")]
+    assert d1["items"] == [{"i": 0, "kind": "html"}, {"i": 1, "kind": "media"}]
+    # NULL spans row → NULL in every output column, never [] or ""
+    assert all(d2[c] is None for c, _ in outputs)
+    assert d3 == {
+        "doc_id": "d3", "part": 10, "spans": [], "kinds": "", "refs": [], "items": []
+    }
+
 
 def test_null_spans_row():
-    from xhtmlkit_spark.operators.extract_stage import make_extract_fn
-    from xkit.options import DEFAULT_OPTIONS
+    from xhtmlkit_spark.operators.extract_stage import make_doc_stage_fn
 
     span_t = pa.struct([pa.field("kind", pa.string()), pa.field("text", pa.string()),
                         pa.field("media_ref", pa.string()), pa.field("offset", pa.int32())])
     spans = pa.array([None, [{"kind": "html", "text": "<p>kept text</p>", "media_ref": None, "offset": 0}]],
                      type=pa.list_(span_t))
     batch = pa.RecordBatch.from_arrays([pa.array(["a", "b"]), spans], names=["doc_id", "spans"])
-    fn = make_extract_fn(DEFAULT_OPTIONS, 0)
+    fn = make_doc_stage_fn(extract_doc, 0)
     (out,) = list(fn(iter([batch])))
     rows = out.column(1).to_pylist()
     # NULL input spans stay NULL (not []) — the output ListArray carries
@@ -355,11 +412,14 @@ def test_new_stages_survive_null_spans_rows(spark):
 
     from xhtmlkit_spark.operators.harvest_stage import (
         doc_links,
+        harvest_all,
         page_meta,
         table_rows,
     )
     from xhtmlkit_spark.operators.markdown_stage import markdown_docs
+    from xhtmlkit_spark.operators.normalize_stage import normalize_xhtml
     from xhtmlkit_spark.operators.project_stage import project_docs
+    from xhtmlkit_spark.operators.select_stage import select_multi
 
     span = Row("kind", "text", "media_ref", "offset")
     rows = [
@@ -389,6 +449,30 @@ def test_new_stages_survive_null_spans_rows(spark):
     assert pm["ok"]["title"] == "T"
     assert pm["null_spans"]["title"] is None and pm["null_spans"]["meta"] is None
     assert pm["null_text"]["title"] is None
+    # multi-column stages: a NULL spans row is NULL in EVERY output
+    # column; no-html rows give [] span/list columns (and NULL xhtml)
+    no_html = ("null_text", "empty_spans")
+    ha = {r["doc_id"]: r for r in harvest_all(df).collect()}
+    assert ha["ok"]["tables"] == [Row(table_idx=0, row_idx=0, is_header=False, cells=["c"])]
+    assert ha["ok"]["links"] == [Row(link_idx=0, url="u", anchor_text="l")]
+    assert ha["ok"]["title"] == "T" and ha["ok"]["meta"] == {}
+    null_row = ha["null_spans"].asDict()
+    assert all(v is None for k, v in null_row.items() if k not in ("doc_id", "part"))
+    for d in no_html:
+        assert ha[d]["tables"] == [] and ha[d]["links"] == [] and ha[d]["meta"] == {}
+        assert ha[d]["title"] is None and ha[d]["canonical"] is None
+    for queries in ({"cells": "td"}, {"cells": "td", "anchors": "a"}):
+        sm = {r["doc_id"]: r for r in select_multi(df, queries).collect()}
+        assert [s["text"] for s in sm["ok"]["cells"]] == ["c"]
+        if "anchors" in queries:
+            assert [s["text"] for s in sm["ok"]["anchors"]] == ["l"]
+        for q in queries:
+            assert sm["null_spans"][q] is None
+            assert sm["null_text"][q] == [] and sm["empty_spans"][q] == []
+    nx = {r["doc_id"]: r["xhtml"] for r in normalize_xhtml(df).collect()}
+    assert nx["ok"].startswith("<title>T</title>")
+    assert nx["null_spans"] is None
+    assert all(nx[d] is None for d in no_html)
 
 
 def test_build_crawl_frontier(spark, tmp_path):

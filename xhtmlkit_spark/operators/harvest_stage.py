@@ -26,15 +26,13 @@ shuffle typed longs/strings, never documents.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xhtmlkit_spark.operators.extract_stage import (
-    make_doc_stage_fn,
-    run_doc_stage,
-)
-from xkit.encoding import decode_html_bytes
+from xhtmlkit_spark.operators.extract_stage import SPANS_OUT, run_doc_stage
 from xkit.dom import repair
+from xkit.encoding import spans_in_order
 from xkit.harvest import (
     harvest_links,
     harvest_media,
@@ -60,21 +58,52 @@ __all__ = [
 ]
 
 
+_META_OUT = (
+    ("title", pa.string()),
+    ("lang", pa.string()),
+    ("canonical", pa.string()),
+    ("meta", pa.map_(pa.string(), pa.string())),
+)
+
+
 def _doc_events(kinds, texts, offsets, fragment):
     """Per-span repaired event streams of one document, offset order."""
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
+    for _, kind, raw in spans_in_order(kinds, texts, offsets):
+        if kind == "html":
+            yield repair(tokenize(raw), fragment=fragment)
+
+
+def _first_meta(per_span) -> tuple:
+    """Fold per-span ``harvest_meta`` results into one document's
+    ``(title, lang, canonical, meta items)``: the first span providing
+    each piece wins, mirroring the in-page first-wins rule."""
+    title = lang = canonical = None
+    meta: dict = {}
+    for t, lg, cn, m in per_span:
+        title = title if title is not None else t
+        lang = lang if lang is not None else lg
+        canonical = canonical if canonical is not None else cn
+        for k, v in m.items():
+            if k not in meta:
+                meta[k] = v
+    return title, lang, canonical, list(meta.items())
+
+
+def _text_carrier(df: DataFrame, text_col: str, pt: list) -> DataFrame:
+    """Wrap a raw text column into the span carrier: one html span at
+    offset 0, so a text column rides the same doc-stage kernel."""
+    return df.select(
+        "doc_id",
+        *pt,
+        F.array(
+            F.struct(
+                F.lit("html").alias("kind"),
+                F.col(text_col).alias("text"),
+                F.lit(None).cast("string").alias("media_ref"),
+                F.lit(0).cast("int").alias("offset"),
+            )
+        ).alias("spans"),
     )
-    for i in order:
-        if kinds[i] != "html":
-            continue
-        raw = texts[i]
-        if raw is None:
-            continue
-        if isinstance(raw, (bytes, bytearray)):
-            raw = decode_html_bytes(bytes(raw))
-        yield repair(tokenize(raw), fragment=fragment)
 
 
 def harvest_doc_tables(
@@ -159,13 +188,10 @@ def media_refs(
     base = options.base_url
     fragment = options.fragment
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            return harvest_doc_media(kinds, texts, refs, offsets, base, fragment)
+    def doc_fn(kinds, texts, refs, offsets):
+        return (harvest_doc_media(kinds, texts, refs, offsets, base, fragment),)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(df, batch_fn, passthrough)
+    out = run_doc_stage(df, doc_fn, SPANS_OUT, passthrough)
     s = out.select(
         "doc_id", *pt, F.posexplode("spans").alias("media_idx", "s")
     )
@@ -193,34 +219,19 @@ def sitemap_entries(
     wrapped into the standard span carrier so the plan is the same
     one-exchange/one-MapInArrow shape as every parser stage."""
     pt = [c for c in passthrough if c in df.columns]
-    carrier = df.select(
-        "doc_id",
-        *pt,
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                F.col(text_col).alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).cast("int").alias("offset"),
-            )
-        ).alias("spans"),
-    )
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            ok: list = []
-            ot: list = []
-            om: list = []
-            for events in _doc_events(kinds, texts, offsets, False):
-                for loc, lastmod, is_index in harvest_sitemap(events):
-                    ok.append("sitemapindex" if is_index else "url")
-                    ot.append(lastmod)
-                    om.append(loc)
-            return ok, ot, om, list(range(len(ok)))
+    def doc_fn(kinds, texts, refs, offsets):
+        ok: list = []
+        ot: list = []
+        om: list = []
+        for events in _doc_events(kinds, texts, offsets, False):
+            for loc, lastmod, is_index in harvest_sitemap(events):
+                ok.append("sitemapindex" if is_index else "url")
+                ot.append(lastmod)
+                om.append(loc)
+        return ((ok, ot, om, list(range(len(ok)))),)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(carrier, batch_fn, passthrough)
+    out = run_doc_stage(_text_carrier(df, text_col, pt), doc_fn, SPANS_OUT, passthrough)
     s = out.select("doc_id", *pt, F.posexplode("spans").alias("entry_idx", "s"))
     return s.select(
         "doc_id",
@@ -242,34 +253,19 @@ def feed_entries(
     "title\\tpublished" (titles are A25-collapsed so the tab is safe;
     empty means absent), media_ref = url."""
     pt = [c for c in passthrough if c in df.columns]
-    carrier = df.select(
-        "doc_id",
-        *pt,
-        F.array(
-            F.struct(
-                F.lit("html").alias("kind"),
-                F.col(text_col).alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).cast("int").alias("offset"),
-            )
-        ).alias("spans"),
-    )
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            ok: list = []
-            ot: list = []
-            om: list = []
-            for events in _doc_events(kinds, texts, offsets, False):
-                for ftype, title, url, published in harvest_feed(events):
-                    ok.append(ftype)
-                    ot.append("%s\t%s" % (title or "", published or ""))
-                    om.append(url)
-            return ok, ot, om, list(range(len(ok)))
+    def doc_fn(kinds, texts, refs, offsets):
+        ok: list = []
+        ot: list = []
+        om: list = []
+        for events in _doc_events(kinds, texts, offsets, False):
+            for ftype, title, url, published in harvest_feed(events):
+                ok.append(ftype)
+                ot.append("%s\t%s" % (title or "", published or ""))
+                om.append(url)
+        return ((ok, ot, om, list(range(len(ok)))),)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(carrier, batch_fn, passthrough)
+    out = run_doc_stage(_text_carrier(df, text_col, pt), doc_fn, SPANS_OUT, passthrough)
     s = out.select("doc_id", *pt, F.posexplode("spans").alias("entry_idx", "s"))
     tp = F.split(F.col("s.text"), "\t")
     return s.select(
@@ -293,13 +289,10 @@ def table_rows(
     pt = [c for c in passthrough if c in df.columns]
     fragment = options.fragment
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            return harvest_doc_tables(kinds, texts, refs, offsets, fragment)
+    def doc_fn(kinds, texts, refs, offsets):
+        return (harvest_doc_tables(kinds, texts, refs, offsets, fragment),)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(df, batch_fn, passthrough)
+    out = run_doc_stage(df, doc_fn, SPANS_OUT, passthrough)
     s = out.select("doc_id", *pt, F.explode("spans").alias("s"))
     loc = F.split(F.col("s.media_ref"), ":")
     return s.select(
@@ -326,13 +319,10 @@ def doc_links(
     base = options.base_url
     fragment = options.fragment
 
-    def batch_fn(n_pt: int):
-        def doc_fn(kinds, texts, refs, offsets):
-            return harvest_doc_links(kinds, texts, refs, offsets, base, fragment)
+    def doc_fn(kinds, texts, refs, offsets):
+        return (harvest_doc_links(kinds, texts, refs, offsets, base, fragment),)
 
-        return make_doc_stage_fn(doc_fn, n_pt)
-
-    out = run_doc_stage(df, batch_fn, passthrough)
+    out = run_doc_stage(df, doc_fn, SPANS_OUT, passthrough)
     s = out.select(
         "doc_id", *pt, F.posexplode("spans").alias("link_idx", "s")
     )
@@ -356,85 +346,36 @@ def page_meta(
     and the <meta name/property → content> map. The ONE projection
     that reads head content (extraction/markdown drop it). A doc's
     html spans are scanned in offset order; the first span providing
-    each piece wins, mirroring the in-page first-wins rule. Own
-    mapInArrow (the outputs are typed scalars + a map column, not
-    span-shaped) — same pruned-scan plan as every per-doc stage."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from xhtmlkit_spark.operators.extract_stage import unpack_spans
-
-    pt = [c for c in passthrough if c in df.columns]
-    pruned = df.select("doc_id", *pt, "spans")
+    each piece wins, mirroring the in-page first-wins rule. Typed
+    scalar + map columns, not span-shaped — same pruned-scan plan and
+    doc-stage kernel as every per-doc stage."""
     base = options.base_url
     fragment = options.fragment
 
-    def doc_meta(kinds, texts, offsets):
-        title = lang = canonical = None
-        meta: dict = {}
-        for events in _doc_events(kinds, texts, offsets, fragment):
-            t, lg, cn, m = harvest_meta(events, base=base)
-            title = title if title is not None else t
-            lang = lang if lang is not None else lg
-            canonical = canonical if canonical is not None else cn
-            for k, v in m.items():
-                if k not in meta:
-                    meta[k] = v
-        return title, lang, canonical, list(meta.items())
+    def doc_fn(kinds, texts, refs, offsets):
+        return _first_meta(
+            harvest_meta(events, base=base)
+            for events in _doc_events(kinds, texts, offsets, fragment)
+        )
 
-    def batches(it):
-        for batch in it:
-            spans_idx = len(pt) + 1
-            offs, kind_l, text_l, _ref_l, off_l, nulls, n_rows = unpack_spans(
-                batch, spans_idx
-            )
-            titles: list = []
-            langs: list = []
-            canons: list = []
-            metas: list = []
-            for i in range(n_rows):
-                if nulls is None or nulls[i]:
-                    s, e = offs[i], offs[i + 1]
-                    t, lg, cn, m = doc_meta(kind_l[s:e], text_l[s:e], off_l[s:e])
-                    titles.append(t)
-                    langs.append(lg)
-                    canons.append(cn)
-                    metas.append(m)
-                else:
-                    titles.append(None)
-                    langs.append(None)
-                    canons.append(None)
-                    metas.append(None)
-            cols = [batch.column(j) for j in range(spans_idx)] + [
-                pa.array(titles, pa.string()),
-                pa.array(langs, pa.string()),
-                pa.array(canons, pa.string()),
-                pa.array(metas, pa.map_(pa.string(), pa.string())),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                schema=pa.schema(
-                    [batch.schema.field(j) for j in range(spans_idx)]
-                    + [
-                        pa.field("title", pa.string()),
-                        pa.field("lang", pa.string()),
-                        pa.field("canonical", pa.string()),
-                        pa.field("meta", pa.map_(pa.string(), pa.string())),
-                    ]
-                ),
-            )
+    return run_doc_stage(df, doc_fn, _META_OUT, passthrough)
 
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.StringType())]
-        + [pruned.schema[c] for c in pt]
-        + [
-            T.StructField("title", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("canonical", T.StringType()),
-            T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-        ]
-    )
-    return pruned.mapInArrow(batches, out_schema)
+
+_PA_TABLE_ROW = pa.struct(
+    [
+        pa.field("table_idx", pa.int32()),
+        pa.field("row_idx", pa.int32()),
+        pa.field("is_header", pa.bool_()),
+        pa.field("cells", pa.list_(pa.string())),
+    ]
+)
+_PA_LINK = pa.struct(
+    [
+        pa.field("link_idx", pa.int32()),
+        pa.field("url", pa.string()),
+        pa.field("anchor_text", pa.string()),
+    ]
+)
 
 
 def harvest_all(
@@ -451,37 +392,13 @@ def harvest_all(
     projection's price instead of three (same fused-pass rationale as
     project_docs / select_multi). Explode the arrays downstream for
     the row-shaped twins of table_rows / doc_links."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from xhtmlkit_spark.operators.extract_stage import unpack_spans
-
-    pt = [c for c in passthrough if c in df.columns]
-    pruned = df.select("doc_id", *pt, "spans")
     base = options.base_url
     fragment = options.fragment
 
-    pa_table = pa.struct(
-        [
-            pa.field("table_idx", pa.int32()),
-            pa.field("row_idx", pa.int32()),
-            pa.field("is_header", pa.bool_()),
-            pa.field("cells", pa.list_(pa.string())),
-        ]
-    )
-    pa_link = pa.struct(
-        [
-            pa.field("link_idx", pa.int32()),
-            pa.field("url", pa.string()),
-            pa.field("anchor_text", pa.string()),
-        ]
-    )
-
-    def doc_all(kinds, texts, offsets):
+    def doc_fn(kinds, texts, refs, offsets):
         tables: list = []
         links: list = []
-        title = lang = canonical = None
-        meta: dict = {}
+        metas: list = []
         t_base = 0
         for events in _doc_events(kinds, texts, offsets, fragment):
             rows = harvest_tables(events)
@@ -500,89 +417,12 @@ def harvest_all(
                 links.append(
                     {"link_idx": len(links), "url": url, "anchor_text": text}
                 )
-            t, lg, cn, m = harvest_meta(events, base=base)
-            title = title if title is not None else t
-            lang = lang if lang is not None else lg
-            canonical = canonical if canonical is not None else cn
-            for k, v in m.items():
-                if k not in meta:
-                    meta[k] = v
-        return tables, links, title, lang, canonical, list(meta.items())
+            metas.append(harvest_meta(events, base=base))
+        return (tables, links, *_first_meta(metas))
 
-    def batches(it):
-        for batch in it:
-            spans_idx = len(pt) + 1
-            offs, kind_l, text_l, _ref_l, off_l, nulls, n_rows = unpack_spans(
-                batch, spans_idx
-            )
-            cols_out = {k: [] for k in ("tables", "links", "title", "lang", "canonical", "meta")}
-            for i in range(n_rows):
-                if nulls is None or nulls[i]:
-                    s, e = offs[i], offs[i + 1]
-                    tb, lk, t, lg, cn, m = doc_all(
-                        kind_l[s:e], text_l[s:e], off_l[s:e]
-                    )
-                    vals = (tb, lk, t, lg, cn, m)
-                else:
-                    vals = (None, None, None, None, None, None)
-                for k, v in zip(cols_out, vals):
-                    cols_out[k].append(v)
-            cols = [batch.column(j) for j in range(spans_idx)] + [
-                pa.array(cols_out["tables"], pa.list_(pa_table)),
-                pa.array(cols_out["links"], pa.list_(pa_link)),
-                pa.array(cols_out["title"], pa.string()),
-                pa.array(cols_out["lang"], pa.string()),
-                pa.array(cols_out["canonical"], pa.string()),
-                pa.array(cols_out["meta"], pa.map_(pa.string(), pa.string())),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols,
-                schema=pa.schema(
-                    [batch.schema.field(j) for j in range(spans_idx)]
-                    + [
-                        pa.field("tables", pa.list_(pa_table)),
-                        pa.field("links", pa.list_(pa_link)),
-                        pa.field("title", pa.string()),
-                        pa.field("lang", pa.string()),
-                        pa.field("canonical", pa.string()),
-                        pa.field("meta", pa.map_(pa.string(), pa.string())),
-                    ]
-                ),
-            )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.StringType())]
-        + [pruned.schema[c] for c in pt]
-        + [
-            T.StructField(
-                "tables",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("table_idx", T.IntegerType()),
-                            T.StructField("row_idx", T.IntegerType()),
-                            T.StructField("is_header", T.BooleanType()),
-                            T.StructField("cells", T.ArrayType(T.StringType())),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField(
-                "links",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("link_idx", T.IntegerType()),
-                            T.StructField("url", T.StringType()),
-                            T.StructField("anchor_text", T.StringType()),
-                        ]
-                    )
-                ),
-            ),
-            T.StructField("title", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("canonical", T.StringType()),
-            T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-        ]
-    )
-    return pruned.mapInArrow(batches, out_schema)
+    outputs = [
+        ("tables", pa.list_(_PA_TABLE_ROW)),
+        ("links", pa.list_(_PA_LINK)),
+        *_META_OUT,
+    ]
+    return run_doc_stage(df, doc_fn, outputs, passthrough)

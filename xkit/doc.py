@@ -16,7 +16,7 @@ test (SURVEY.md §5.2.3) meaningful.
 
 from __future__ import annotations
 
-from xkit.encoding import decode_html_bytes
+from xkit.encoding import spans_in_order
 from xkit.extract import extract_html
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
 from xkit.pdfmini import extract_pdf_text
@@ -41,32 +41,16 @@ def extract_doc(
     Returns ``(kinds, texts, media_refs, offsets)`` of the output
     spans, offsets = 0..m-1.
     """
-    # null offsets sort after the real ones, stable by input position —
-    # the schema allows them and a None<int comparison would kill the
-    # whole Arrow batch (A17 never-fail)
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
-    )
     ok: list = []
     ot: list = []
     om: list = []
-    for i in order:
-        kind = kinds[i]
+    for i, kind, raw in spans_in_order(kinds, texts, offsets):
         if kind == "html":
-            raw = texts[i]
-            if raw is None:
-                continue
-            if isinstance(raw, (bytes, bytearray)):  # encoding fixtures (A3–A4)
-                raw = decode_html_bytes(bytes(raw))
             for k, t, m in extract_html(raw, options):
                 ok.append(k)
                 ot.append(t)
                 om.append(m)
         elif kind == "pdf":
-            raw = texts[i]
-            if raw is None:
-                continue
             for block in extract_pdf_text(raw, options.pdf_password):
                 ok.append("text")
                 ot.append(block)

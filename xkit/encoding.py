@@ -17,7 +17,7 @@ from __future__ import annotations
 import codecs
 import re
 
-__all__ = ["sniff", "decode_html_bytes", "SNIFF_WINDOW"]
+__all__ = ["sniff", "decode_html_bytes", "spans_in_order", "SNIFF_WINDOW"]
 
 SNIFF_WINDOW = 4096  # bytes scanned for <meta> declarations (A4)
 
@@ -109,3 +109,27 @@ def decode_html_bytes(data: bytes, http_charset: str | None = None) -> str:
     """Sniff + decode; never raises (undecodable bytes → U+FFFD)."""
     codec, skip = sniff(data, http_charset)
     return data[skip:].decode(codec, errors="replace")
+
+
+def spans_in_order(kinds: list, texts: list, offsets: list):
+    """Yield ``(i, kind, text)`` for one document's spans in offset
+    order — the shared preamble of every per-document function. Null
+    offsets sort after the real ones, ties stable by input position
+    (the schema allows them, and a None<int comparison would kill the
+    whole Arrow batch — A17 never-fail). html and pdf spans with NULL
+    text are skipped; html bytes are sniffed and decoded (A3–A4).
+    Other kinds pass through as-is: callers ignore kinds they do not
+    handle."""
+    order = sorted(
+        range(len(kinds)),
+        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
+    )
+    for i in order:
+        kind = kinds[i]
+        text = texts[i]
+        if kind == "html" or kind == "pdf":
+            if text is None:
+                continue
+            if kind == "html" and isinstance(text, (bytes, bytearray)):
+                text = decode_html_bytes(bytes(text))
+        yield i, kind, text

@@ -32,7 +32,7 @@ xhtmlkit_spark/operators/project_stage.py.
 from __future__ import annotations
 
 from xkit.dom import repair, serialize
-from xkit.encoding import decode_html_bytes
+from xkit.encoding import spans_in_order
 from xkit.extract import _extract_html_tokens
 from xkit.markdown import to_markdown
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
@@ -54,10 +54,6 @@ def project_doc(
     xhtml)`` with a single tokenize per html span. ``xhtml`` is None
     unless ``want_xhtml``; markdown/xhtml are None (not "") for docs
     with no html content, matching the single-projection stages."""
-    order = sorted(
-        range(len(kinds)),
-        key=lambda i: (offsets[i] is None, offsets[i] if offsets[i] is not None else 0, i),
-    )
     ok: list = []
     ot: list = []
     om: list = []
@@ -65,14 +61,8 @@ def project_doc(
     xh_parts: list = []
     fragment = options.fragment
     base = options.base_url
-    for i in order:
-        kind = kinds[i]
+    for i, kind, raw in spans_in_order(kinds, texts, offsets):
         if kind == "html":
-            raw = texts[i]
-            if raw is None:
-                continue
-            if isinstance(raw, (bytes, bytearray)):
-                raw = decode_html_bytes(bytes(raw))
             toks = tokenize(raw)  # the ONE parse all projections share
             for k, t, m in _extract_html_tokens(raw, options, _tokens=toks):
                 ok.append(k)
@@ -85,9 +75,6 @@ def project_doc(
             if want_xhtml:
                 xh_parts.append(serialize(events, xml_safe=True))
         elif kind == "pdf":
-            raw = texts[i]
-            if raw is None:
-                continue
             for block in extract_pdf_text(raw, options.pdf_password):
                 ok.append("text")
                 ot.append(block)
