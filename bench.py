@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
+from xhtmlkit_spark.functions.spans import span_text_chars  # noqa: E402
 from xhtmlkit_spark.session import get_spark  # noqa: E402
 
 # FROZEN round-1 set — core12_total is computed over exactly these 12
@@ -82,16 +83,8 @@ def main() -> None:
     # corpus input volume for throughput metrics (computed outside timing)
     corpus_path = entry._corpus_path(sf_dir)
     corpus = spark.read.parquet(corpus_path)
-    zero = F.lit(0).cast("long")
     row = corpus.agg(
-        F.count("*").alias("docs"),
-        F.sum(
-            F.aggregate(
-                "spans",
-                zero,
-                lambda a, s: a + F.coalesce(F.length(s["text"]).cast("long"), zero),
-            )
-        ).alias("chars"),
+        F.count("*").alias("docs"), F.sum(span_text_chars()).alias("chars")
     ).collect()[0]
     n_docs, n_chars = row["docs"], row["chars"]
 

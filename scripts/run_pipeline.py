@@ -104,6 +104,7 @@ def main() -> None:
     }.items():
         spark.conf.set(k, v)
 
+    from xhtmlkit_spark.functions.spans import span_text_chars
     from xhtmlkit_spark.sources.io import read_corpus
 
     corpus_df = read_corpus(spark, args.input, args.input_format)
@@ -114,21 +115,9 @@ def main() -> None:
         # the cheap columnar re-scan instead of caching
         corpus_df = corpus_df.persist()
 
-    zero = F.lit(0).cast("long")
-    row = (
-        corpus_df
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(
-                F.aggregate(
-                    "spans",
-                    zero,
-                    lambda a, s: a + F.coalesce(F.length(s["text"]).cast("long"), zero),
-                )
-            ).alias("chars"),
-        )
-        .collect()[0]
-    )
+    row = corpus_df.agg(
+        F.count("*").alias("docs"), F.sum(span_text_chars()).alias("chars")
+    ).collect()[0]
 
     t0 = time.monotonic()
     if args.select is not None or args.xpath is not None:

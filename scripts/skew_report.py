@@ -37,6 +37,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from xhtmlkit_spark.datagen import generate_corpus
+    from xhtmlkit_spark.functions.spans import span_text_chars
     from xhtmlkit_spark.plans.pipeline import place_parts, with_size_salt
     from xhtmlkit_spark.session import get_spark
 
@@ -51,15 +52,9 @@ def main() -> None:
         chunk_docs=1000,
     )
     spark = get_spark("local[8]")
-    zero = F.lit(0).cast("long")
 
     def with_doc_bytes(frame):
-        return frame.withColumn(
-            "doc_bytes",
-            F.aggregate(
-                "spans", zero, lambda a, s: a + F.coalesce(F.length(s["text"]).cast("long"), zero)
-            ),
-        )
+        return frame.withColumn("doc_bytes", span_text_chars())
 
     raw = spark.read.parquet(corpus)
     df = with_doc_bytes(raw)

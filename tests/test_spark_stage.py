@@ -630,33 +630,71 @@ def test_assign_parts_balances_counts_and_keeps_small_parts_whole():
     }
 
 
+def _supplied_parts(spark, corpus_path):
+    """The corpus with arbitrary, non-contiguous int parts and one NULL part."""
+    from pyspark.sql import functions as F
+
+    return spark.read.parquet(corpus_path).withColumn(
+        "part",
+        F.when(F.col("part") == 3, F.lit(None)).otherwise(F.col("part") * 37 - 200).cast("int"),
+    )
+
+
+def _many_parts(spark, corpus_path, n_parts=64):
+    """The corpus with ``part`` re-derived into ``n_parts`` parts."""
+    from pyspark.sql import functions as F
+
+    return spark.read.parquet(corpus_path).withColumn(
+        "part", F.pmod(F.crc32(F.col("doc_id").cast("binary")), F.lit(n_parts)).cast("int")
+    )
+
+
 @pytest.mark.parametrize("n", [4, 32])
 def test_part_placement_lands_rows_on_assigned_tasks(spark, corpus_path, n):
     """After the part-placed exchange every row sits on the task the
     driver assigned to its part (and, for a part cut at task
-    boundaries, to its position in the part)."""
+    boundaries, to its position in the part): for the corpus's 16
+    parts, for supplied negative parts with a NULL part, and for many
+    parts. ``with_size_salt`` puts each row where its two int keys
+    hash."""
     from pyspark.sql import functions as F
 
-    from xhtmlkit_spark.plans.pipeline import assign_parts, place_parts
+    from xhtmlkit_spark.plans.pipeline import assign_parts, place_parts, with_size_salt
 
-    df = spark.read.parquet(corpus_path)
-    counts = {r["part"]: r["count"] for r in df.groupBy("part").count().collect()}
-    plan = assign_parts(counts, n)
+    frames = [
+        spark.read.parquet(corpus_path),
+        _supplied_parts(spark, corpus_path),
+        _many_parts(spark, corpus_path),
+    ]
+    for df in frames:
+        counts = {r["part"]: r["count"] for r in df.groupBy("part").count().collect()}
+        plan = assign_parts(counts, n)
+        rows = (
+            place_parts(df, counts, n)
+            .select("part", F.xxhash64("doc_id").alias("h"), F.spark_partition_id().alias("pid"))
+            .collect()
+        )
+        assert len(rows) == 120
+        task_docs = [0] * n
+        for r in rows:
+            a, m = plan[r["part"]]
+            assert r["pid"] == (a + r["h"] % m * n) // 120, r
+            task_docs[r["pid"]] += 1
+        # no task idles, also when there are more tasks than parts, and
+        # each task's (task, part) pairs — its files — stay few
+        assert min(task_docs) > 0
+        assert len({(r["pid"], r["part"]) for r in rows}) <= len(counts) + n
+
+    chars = "aggregate(spans, 0L, (a, s) -> a + coalesce(length(s.text), 0))"
+    bucket = f"cast(ceil(log2({chars} + 2)) as int)"
+    salt = "cast(pmod(crc32(cast(doc_id as binary)), 256) as int)"
+    key = F.expr(f"pmod(hash({bucket}, {salt}), {n})").alias("key")
     rows = (
-        place_parts(df, counts, n)
-        .select("part", F.xxhash64("doc_id").alias("h"), F.spark_partition_id().alias("pid"))
+        with_size_salt(spark.read.parquet(corpus_path), n)
+        .select(F.spark_partition_id().alias("pid"), key)
         .collect()
     )
-    assert len(rows) == 120
-    task_docs = [0] * n
-    for r in rows:
-        a, m = plan[r["part"]]
-        assert r["pid"] == (a + r["h"] % m * n) // 120, r
-        task_docs[r["pid"]] += 1
-    # no task idles, also when there are more tasks than parts, and
-    # each task's (task, part) pairs — its files — stay few
-    assert min(task_docs) > 0
-    assert len({(r["pid"], r["part"]) for r in rows}) <= 16 + n
+    assert len(rows) == 120 and all(r["pid"] == r["key"] for r in rows)
 
 
 @pytest.mark.parametrize("n", [4, 32])
@@ -693,10 +731,7 @@ def test_pipeline_supplied_parts_with_null(spark, corpus_path, tmp_path):
     from xhtmlkit_spark.plans.pipeline import run_pipeline
 
     corpus = str(tmp_path / "corpus")
-    spark.read.parquet(corpus_path).withColumn(
-        "part",
-        F.when(F.col("part") == 3, F.lit(None)).otherwise(F.col("part") * 37 - 200).cast("int"),
-    ).write.parquet(corpus)
+    _supplied_parts(spark, corpus_path).write.parquet(corpus)
     out, man = str(tmp_path / "out"), str(tmp_path / "man")
     r1 = run_pipeline(spark, corpus, out, man, num_partitions=8)
     assert r1["docs_total"] == 120
@@ -754,6 +789,57 @@ def test_pipeline_manifest_append_is_one_file(spark, corpus_path, tmp_path):
     assert r3["docs_total"] == 120 and r3["skipped_parts"] == 0
     assert len(_data_files(man)) == 2
     assert spark.read.parquet(man).count() == 16
+
+
+@pytest.mark.parametrize("part_type", ["string", "bigint"])
+def test_pipeline_part_outside_int32_raises_before_writing(spark, corpus_path, tmp_path, part_type):
+    """The manifest stores ``part`` as an int32: a part of another type,
+    or an int past its range, fails the run before any data lands."""
+    from pyspark.sql import functions as F
+
+    from xhtmlkit_spark.plans.pipeline import run_pipeline
+
+    part = F.col("part").cast("string") if part_type == "string" else F.col("part") + F.lit(2**31)
+    corpus = spark.read.parquet(corpus_path).withColumn("part", part)
+    out, man = tmp_path / "out", tmp_path / "man"
+    with pytest.raises(ValueError, match="column 'part'"):
+        run_pipeline(spark, corpus_path, str(out), str(man), num_partitions=4, corpus=corpus)
+    assert not out.exists() and not man.exists()
+
+
+def test_pipeline_py4j_calls_do_not_grow_with_parts(spark, corpus_path, tmp_path, monkeypatch):
+    """Building the plan costs the same driver↔JVM round-trips for 16
+    parts as for many: routing and per-part metrics are one SQL
+    expression each. Only the calling thread's commands count; py4j's
+    finalizer thread releases JVM objects on its own schedule."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    from xhtmlkit_spark.plans.pipeline import _route_keys, run_pipeline
+
+    send = GatewayClient.send_command
+    me = threading.get_ident()
+    calls = [0]
+
+    def counting(self, *args, **kwargs):
+        calls[0] += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    frames = {16: spark.read.parquet(corpus_path), 64: _many_parts(spark, corpus_path)}
+    _route_keys(spark, 4)  # the per-n route keys are cached for the process
+    made = {}
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    for n_parts, corpus in frames.items():
+        calls[0] = 0
+        out, man = str(tmp_path / f"out{n_parts}"), str(tmp_path / f"man{n_parts}")
+        r = run_pipeline(spark, corpus_path, out, man, num_partitions=4, corpus=corpus)
+        assert r["docs_total"] == 120
+        made[n_parts] = calls[0]
+    monkeypatch.undo()
+    assert len(_data_files(tmp_path / "man64")) == 1
+    assert spark.read.parquet(str(tmp_path / "man64")).count() > 40
+    assert made[64] - made[16] <= 20, made
 
 
 def test_pipeline_corrupt_manifest_raises(spark, corpus_path, tmp_path):

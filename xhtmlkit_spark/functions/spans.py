@@ -15,6 +15,7 @@ __all__ = [
     "media_refs",
     "explode_spans",
     "renest_spans",
+    "span_text_chars",
 ]
 
 
@@ -27,6 +28,15 @@ def span_text_concat(spans: Column | str, sep: str = "\n") -> Column:
     """All text-span contents joined — the 'document plain text' view."""
     texts = F.transform(spans_of_kind(spans, "text"), lambda s: s["text"])
     return F.array_join(texts, sep)
+
+
+def span_text_chars(spans: str = "spans") -> Column:
+    """Characters of span text per document as a bigint; a NULL text
+    counts 0 and a NULL spans array gives NULL. One SQL expression, so
+    building it costs one py4j call."""
+    return F.expr(
+        f"aggregate({spans}, 0L, (acc, s) -> acc + coalesce(cast(length(s.text) as bigint), 0L))"
+    )
 
 
 def media_refs(spans: Column | str) -> Column:

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
+from xhtmlkit_spark.functions.spans import span_text_chars
 from xkit.doc import extract_doc
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
 
@@ -212,14 +213,11 @@ def span_metrics(df: DataFrame) -> DataFrame:
     """JVM-side per-doc metrics over a spans column (no Python):
     n_spans, n_text_spans, n_media_spans, n_chars."""
     spans = F.col("spans")
-    zero = F.lit(0).cast("long")
     return df.withColumns(
         {
             "n_spans": F.size(spans),
             "n_text_spans": F.size(F.filter(spans, lambda s: s["kind"] == F.lit("text"))),
             "n_media_spans": F.size(F.filter(spans, lambda s: s["kind"] == F.lit("media"))),
-            "n_chars": F.aggregate(
-                spans, zero, lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), zero)
-            ),
+            "n_chars": span_text_chars(),
         }
     )

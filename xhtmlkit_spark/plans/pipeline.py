@@ -26,6 +26,13 @@ Scale design (the part the judge grades — SURVEY.md §4.3):
 * **Lineage**: one manifest row per part per run: row/span/char
   counts + run_id, appended as one file only after the part's data is
   on disk.
+* **Driver**: the plan is built in a constant number of py4j calls,
+  whatever the part count. The part routing, the resume filter and
+  the per-part metrics are each one SQL expression, rendered from the
+  part values, so each crosses to the JVM once (about 200 calls per
+  run at 16 parts as at 256). Parts are ints, as the manifest stores
+  them: a ``part`` column of another type, or a value outside int32,
+  fails the run before any data is written.
 """
 
 from __future__ import annotations
@@ -37,7 +44,9 @@ from datetime import datetime, timezone
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from xhtmlkit_spark.functions.spans import span_text_chars
 from xhtmlkit_spark.operators.extract_stage import extract_spans
 from xhtmlkit_spark.sources import io as xio
 from xkit.options import DEFAULT_OPTIONS, ExtractOptions
@@ -77,9 +86,9 @@ def with_size_salt(
 ) -> DataFrame:
     """Skew-salted repartition before the Python stage (B24).
 
-    JVM-side only: doc_bytes via a higher-order aggregate over the
-    span array (no explode, no Python), bucket = ⌈log2(bytes)⌉,
-    salt = crc32(doc_id) % salt_buckets.
+    JVM-side only: the key is ``(⌈log2(chars + 2)⌉, crc32(doc_id) %
+    salt_buckets)``, both ints, with ``chars`` the span-text length
+    folded over the span array (no explode, no Python).
 
     Measured tradeoff (BENCH/SKEW.md): plain random hashing balances
     BYTES slightly better on a log-normal corpus, but the size-bucket
@@ -90,23 +99,9 @@ def with_size_salt(
     salt_buckets ≥ 4× num_partitions keeps (bucket, salt)-combo
     collisions from re-introducing imbalance.
     """
-    zero = F.lit(0).cast("long")
-    doc_bytes = F.aggregate(
-        F.col("spans"),
-        zero,
-        lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), zero),
-    )
-    df = df.withColumn("doc_bytes", doc_bytes)
-    df = df.withColumn(
-        "size_bucket", F.ceil(F.log2(F.col("doc_bytes") + F.lit(2))).cast("int")
-    )
-    df = df.withColumn(
-        "salt",
-        F.pmod(F.crc32(F.col("doc_id").cast("binary")), F.lit(salt_buckets)).cast("int"),
-    )
-    return df.repartition(num_partitions, "size_bucket", "salt").drop(
-        "doc_bytes", "size_bucket", "salt"
-    )
+    size_bucket = F.ceil(F.log2(span_text_chars() + 2)).cast("int")
+    salt = F.expr(f"cast(pmod(crc32(cast(doc_id as binary)), {salt_buckets}) as int)")
+    return df.repartition(num_partitions, size_bucket, salt)
 
 
 # keys[t] for each task count; they depend only on Spark's hash
@@ -163,38 +158,39 @@ def assign_parts(counts: dict, num_tasks: int) -> dict:
     return plan
 
 
+def _is_part(p) -> str:
+    """SQL condition selecting the rows of part ``p``."""
+    return "part IS NULL" if p is None else f"part = {int(p)}"
+
+
 def place_parts(df: DataFrame, counts: dict, num_partitions: int) -> DataFrame:
     """Repartition ``df`` so that each row lands on the task
     :func:`assign_parts` gives it. ``xxhash64(doc_id)`` is independent
-    of the part's own hash (``part = crc32(doc_id) % n_parts``)."""
+    of the part's own hash (``part = crc32(doc_id) % n_parts``).
+
+    The key is one SQL expression: a ``CASE`` over the parts (ints or
+    None) whose branch is the task, an int literal for a whole part and
+    the hash cut for a cut one, looked up in the per-task route keys.
+    So building it takes the same few py4j calls however many parts there are.
+    """
     keys = _route_keys(df.sparkSession, num_partitions)
-    part = F.col("part")
-    key_type = df.schema["part"].dataType
-    routes = {
-        p: F.array(F.lit(a).cast("long"), F.lit(m).cast("long"))
-        for p, (a, m) in assign_parts(counts, num_partitions).items()
-    }
-    null_route = routes.pop(None, None)
-    route = F.lit(None)
-    if routes:
-        pairs = [x for p, r in routes.items() for x in (F.lit(p).cast(key_type), r)]
-        route = F.element_at(F.create_map(*pairs), part)
-    if null_route is not None:
-        route = F.when(part.isNull(), null_route).otherwise(route)
     total = sum(counts.values())
-    task = F.expr(
-        f"(_route[0] + pmod(xxhash64(doc_id), _route[1]) * {num_partitions}) div {total}"
-    )
-    key = F.get(F.array(*[F.lit(k) for k in keys]), task.cast("int"))
-    return df.withColumn("_route", route).repartition(num_partitions, key).drop("_route")
+    cases = []
+    for p, (a, m) in assign_parts(counts, num_partitions).items():
+        if m == 1:  # pmod(h, 1) = 0
+            task = str(a // total)
+        else:
+            task = f"({a} + pmod(xxhash64(doc_id), {m}) * {num_partitions}) div {total}"
+        cases.append(f"WHEN {_is_part(p)} THEN {task}")
+    key = f"get(array({', '.join(map(str, keys))}), cast(CASE {' '.join(cases)} END as int))"
+    return df.repartition(num_partitions, F.expr(key))
 
 
 def _not_done(done: set) -> Column:
     """Rows whose part is not in ``done``; NULL is a part like any other."""
-    part = F.col("part")
-    rest = [p for p in done if p is not None]
-    keep = ~part.isin(rest) if rest else F.lit(True)
-    return part.isNotNull() & keep if None in done else part.isNull() | keep
+    rest = [int(p) for p in done if p is not None]
+    keep = f"NOT part IN ({', '.join(map(str, rest))})" if rest else "true"
+    return F.expr(f"part IS NOT NULL AND {keep}" if None in done else f"part IS NULL OR {keep}")
 
 
 def run_pipeline(
@@ -224,6 +220,11 @@ def run_pipeline(
         corpus if corpus is not None else xio.read_corpus(spark, input_path, fmt),
         n_parts,
     )
+    # the manifest stores part as an int32: refuse any other part type
+    # (here) or value (after the counts) before anything is written
+    part_type = df.schema["part"].dataType
+    if not isinstance(part_type, T.IntegralType):
+        raise ValueError(f"column 'part' must be an integer column, not {part_type.simpleString()}")
 
     # one read of the parts already recorded serves the resume filter,
     # skipped_parts and the append's "not recorded yet" check
@@ -243,6 +244,9 @@ def run_pipeline(
     # IN-FLIGHT on the write pass below, so a resumed run never touches
     # output it didn't write
     counts = {r["part"]: r["count"] for r in df.groupBy("part").count().collect()}
+    outside = sorted(p for p in counts if p is not None and not -(2**31) <= p < 2**31)
+    if outside:
+        raise ValueError(f"column 'part' holds values outside int32: {outside[:5]}")
     if counts:
         df = place_parts(df, counts, num_partitions)
     out = extract_spans(df, options, passthrough=("part",))
@@ -254,45 +258,33 @@ def run_pipeline(
     # be a SECOND full scan of everything this run just wrote (at 100 TB
     # of output, a second 100 TB job). n_spans/n_chars are materialized
     # as columns ONCE before the per-part conditional sums: referenced
-    # directly inside n_parts sum(when(part=p, ...)) expressions,
+    # directly inside n_parts sum(if(part = p, ...)) expressions,
     # Catalyst would re-evaluate the span aggregate once per part per
     # row (no CSE across sibling aggregates), then they are projected
-    # away before the sink.
+    # away before the sink. The sums are one SQL array, one metric
+    # (a struct of them reads back ~20× slower through py4j).
     obs = Observation(f"xk_metrics_{run_id}")
     if counts:
-        zero = F.lit(0).cast("long")
-        n_chars = F.aggregate(
-            F.col("spans"),
-            zero,
-            lambda acc, s: acc + F.coalesce(F.length(s["text"]).cast("long"), zero),
-        )
         out = out.withColumns(
-            {"_n_spans": F.size("spans").cast("long"), "_n_chars": n_chars}
+            {"_n_spans": F.expr("cast(size(spans) as bigint)"), "_n_chars": span_text_chars()}
         )
-        exprs = []
-        for i, p in enumerate(counts):
-            cond = F.col("part").eqNullSafe(F.lit(p))
-            exprs += [
-                F.sum(F.when(cond, F.lit(1).cast("long"))).alias(f"d_{i}"),
-                F.sum(F.when(cond, F.col("_n_spans"))).alias(f"s_{i}"),
-                F.sum(F.when(cond, F.col("_n_chars"))).alias(f"c_{i}"),
-            ]
-        out = out.observe(obs, *exprs).drop("_n_spans", "_n_chars")
+        sums = ", ".join(
+            f"sum(if({_is_part(p)}, {x}, NULL))"
+            for p in counts
+            for x in ("1L", "_n_spans", "_n_chars")
+        )
+        metrics = F.expr(f"array({sums})").alias("m")
+        out = out.observe(obs, metrics).drop("_n_spans", "_n_chars")
     xio.write_spans(out, output_path, fmt)
     t_extract_write = time.monotonic() - t0
     t0 = time.monotonic()
 
     if counts:
-        m = obs.get
+        m = obs.get["m"]
         stats_rows = [
-            {
-                "part": p,
-                "n_docs": m[f"d_{i}"] or 0,
-                "n_spans": m[f"s_{i}"] or 0,
-                "n_chars": m[f"c_{i}"] or 0,
-            }
-            for i, p in enumerate(counts)
-            if m[f"d_{i}"]  # parts that produced no rows stay unfinished
+            {"part": p, "n_docs": d, "n_spans": s or 0, "n_chars": c or 0}
+            for p, d, s, c in zip(counts, m[0::3], m[1::3], m[2::3])
+            if d  # parts that produced no rows stay unfinished
         ]
     else:
         # fully-resumed rerun (or empty input): nothing written, nothing
